@@ -162,28 +162,25 @@ object Bench {
     // DIFFERENT fingerprint key, and with SPARK_GRAFT_BENCH_RUNS=1 a cold
     // artifact would fold its one-time build into the first probe timing —
     // probe queries must measure probes on any run, not index construction
-    try graft.ops.SearchOps.ensureLexIndex(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.VectorOps.ensureCentroids(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.VectorOps.ensureTrainedIvf(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // q_ivf_topk_batch probes a corpus-sized-nlist trained index (nlist =
-    // sqrt N) — a different fingerprint than the default-nlist artifact
-    // above, so build it here too
-    try {
-      val nVecs = graft.ops.Tables.t(spark, sfDir, "embeddings").count()
-      graft.ops.VectorOps.ensureTrainedIvf(spark, sfDir,
-        nlist = graft.ops.VectorOps.adaptiveNlist(nVecs)): Unit
-    } catch { case _: Throwable => () }
-    try graft.ops.PqOps.ensurePq(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.VectorOps.ensureSq8(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.BpeOps.ensureBpe(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.SearchOps.ensureBigramLm(spark, sfDir): Unit
-    catch { case _: Throwable => () }
+    import graft.ops.{BpeOps, PqOps, SearchOps, VectorOps}
+    val artifacts: Seq[(String, () => String)] = Seq(
+      "lex_index" -> (() => SearchOps.ensureLexIndex(spark, sfDir)),
+      "ivf_centroids" -> (() => VectorOps.ensureCentroids(spark, sfDir)),
+      "ivf_trained" -> (() => VectorOps.ensureTrainedIvf(spark, sfDir)),
+      // q_ivf_topk_batch probes a corpus-sized-nlist trained index (nlist =
+      // sqrt N) — a different fingerprint than the default-nlist artifact
+      "ivf_trained_batch" -> (() => VectorOps.ensureTrainedIvf(spark, sfDir,
+        nlist = VectorOps.batchNlist(spark, sfDir))),
+      "pq" -> (() => PqOps.ensurePq(spark, sfDir)),
+      "sq8_codes" -> (() => VectorOps.ensureSq8(spark, sfDir)),
+      "bpe_tokenizer" -> (() => BpeOps.ensureBpe(spark, sfDir)),
+      "bigram_lm" -> (() => SearchOps.ensureBigramLm(spark, sfDir)))
+    artifacts.foreach { case (kind, build) =>
+      try build(): Unit
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] artifact $kind FAILED: ${e.getMessage}")
+      }
+    }
     // untimed warmup pass at the TARGET sf: first-touch page cache, JIT at
     // the real data shapes — doubles as the round-robin's pass 0
     run.foreach { name =>

@@ -415,7 +415,12 @@ object SparkEntry {
       f"COALESCE(CAST(sum(CASE WHEN month(o_orderdate) = $m THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE), 0.0) AS m$m%02d")
       .mkString(", ")
 
-  def oracleSql: Map[String, String] = Map(
+  /** DuckDB oracle SQL per query at `sfDir`. Artifact-backed entries
+    * replay from the directory [[ArtifactStore.path]] names for `sfDir` —
+    * the one the face's `ensure` installs — so every key is present
+    * whatever ran before in this JVM. `s` sizes `q_ivf_topk_batch`'s nlist
+    * with the face's footer-only count. */
+  def oracleSql(s: SparkSession, sfDir: String): Map[String, String] = Map(
     "q_scan" -> "SELECT * FROM nation ORDER BY n_nationkey",
     "q_multifile_scan" ->
       """SELECT c_custkey, count(*) AS n_copies FROM
@@ -2265,10 +2270,8 @@ object SparkEntry {
         |    AS tokens_kept,
         |  CAST(500 AS BIGINT) AS budget
         |FROM c GROUP BY source ORDER BY source""".stripMargin,
-    // X69 SQ8 (r13): the probe replays from the PERSISTED code artifact
-    // (the IVF pattern) — see sq8Oracle below
-  ) ++ bpeTrainOracles ++ bpeEncodeOracle ++ ivfOracles ++ pqOracles ++
-    sq8Oracle ++ nlGroundOracle
+  ) ++ bpeTrainOracles ++ bpeEncodeOracle(sfDir) ++ ivfOracles(s, sfDir) ++
+    pqOracles(sfDir) ++ sq8Oracle(sfDir) ++ nlGroundOracle(sfDir)
 
   /** X69 oracle (artifact-replayed since r13): integer code dot over the
     * persisted SQ8 code table, top-50 shortlist, exact micro-int cosine
@@ -2283,10 +2286,11 @@ object SparkEntry {
     * own `col:value` serialization), and runs the grounded SQL the
     * generator is pinned (QueryPipelineSpec) to emit — retrieval order,
     * value provenance, and the final grounded answer in one hash. */
-  private def nlGroundOracle: Map[String, String] =
-    graft.ops.GroundOps.oracleGroundPath.map { p =>
-      val v = graft.ops.GroundOps.groundedValue
-      "q_nl_semantic_ground" ->
+  private def nlGroundOracle(sf: String): Map[String, String] = {
+    val p = ArtifactStore.path("nl_ground", sf, "nation",
+      s"nlground-v1:${GroundOps.question}")
+    val v = GroundOps.groundedValue
+    Map("q_nl_semantic_ground" ->
         s"""WITH coll AS (SELECT chunk_id, text, embedding
            |  FROM read_parquet('$p/chunks/*.parquet')),
            |q AS (SELECT qv FROM read_parquet('$p/qvec/*.parquet')),
@@ -2300,12 +2304,12 @@ object SparkEntry {
            |  ORDER BY score_e6 DESC, chunk_id ASC LIMIT 1)
            |SELECT n.*, ev.chunk_id, ev.score_e6, '$v' AS grounded_value
            |FROM (SELECT * FROM nation WHERE n_name = '$v' LIMIT 20) n
-           |CROSS JOIN ev""".stripMargin
-    }.toMap
+           |CROSS JOIN ev""".stripMargin)
+  }
 
-  private def sq8Oracle: Map[String, String] =
-    graft.ops.VectorOps.oracleSq8Path.map { p =>
-      "q_sq8_topk" ->
+  private def sq8Oracle(sf: String): Map[String, String] = {
+    val p = ArtifactStore.path("sq8_codes", sf, "embeddings", "sq8-v1")
+    Map("q_sq8_topk" ->
         s"""WITH c AS (SELECT vec_id, codes FROM read_parquet('$p/*.parquet')),
            |qc AS (SELECT codes AS qcodes FROM c WHERE vec_id = 0),
            |dots AS (SELECT vec_id, CAST(list_reduce(list_transform(
@@ -2318,8 +2322,8 @@ object SparkEntry {
            |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
            |SELECT e.vec_id, e.label, ${e6(cosSql("embedding", "qv"))} AS score_e6
            |FROM embeddings e JOIN short USING (vec_id) CROSS JOIN q
-           |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
-    }.toMap
+           |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin)
+  }
 
   /** X54a/X54b oracles (since r13): the TRAINING loop itself, replayed in
     * DuckDB — the last two queries that previously had no oracle. A
@@ -2392,18 +2396,15 @@ object SparkEntry {
     s"((((p >> $i) & 1) << ${2 * i + 1}) | (((s >> $i) & 1) << ${2 * i}))")
     .mkString(" | ")
 
-  /** X54c oracle, present once a BPE merge-table artifact exists in this
-    * JVM (Verify runs every query before dumping oracle_sql.json, so the
-    * path is always recorded by dump time; absent → the driver records
-    * its rows-only check, same as before r12). DuckDB replays the encode
+  /** X54c oracle. DuckDB replays the encode
     * against the PERSISTED merge table: the same word sample (20 smallest
     * vocab words + 10×10 OOV compounds), char-split + '</w>', then each
     * merge rank applied as a left-to-right non-overlapping fold — a
     * recursive CTE stepping (word, rank, position) with the accumulator
     * list as state, exactly `encodeWords`' fold semantics. */
-  private def bpeEncodeOracle: Map[String, String] =
-    graft.ops.BpeOps.oracleMergesPath.map { p =>
-      "q_bpe_encode" ->
+  private def bpeEncodeOracle(sf: String): Map[String, String] = {
+    val p = ArtifactStore.path("bpe_tokenizer", sf, "documents", "bpe-v1-20")
+    Map("q_bpe_encode" ->
         s"""WITH RECURSIVE
            |m AS (SELECT rank AS mrank, "left" AS l, "right" AS r
            |  FROM read_parquet('$p/*.parquet')),
@@ -2438,8 +2439,8 @@ object SparkEntry {
            |SELECT word, CAST(len(syms) AS BIGINT) AS n_pieces,
            |  array_to_string(syms, ' ') AS tokens
            |FROM enc, mx WHERE rk = mx.mr + 1 AND pos = 1
-           |ORDER BY word""".stripMargin
-    }.toMap
+           |ORDER BY word""".stripMargin)
+  }
 
   /** IVF probe replays (since r12): the probe queries are PURE FUNCTIONS
     * of the persisted index artifacts (label centroids / trained
@@ -2449,24 +2450,23 @@ object SparkEntry {
     * pruning via the artifact's assignment, and the micro-int cosine over
     * probed rows. The k-means float iteration seeded the ARTIFACT, but
     * every probe over it is deterministic — approximation lives in the
-    * index, not the query, so the hash gate applies. Paths are recorded at
-    * query time (the `q_bpe_encode` pattern): absent → rows-only, as
-    * before r12. */
-  private def ivfOracles: Map[String, String] = {
+    * index, not the query, so the hash gate applies. */
+  private def ivfOracles(s: SparkSession, sf: String): Map[String, String] = {
     def probedSql(nprobe: Int) =
       s"""SELECT label FROM c CROSS JOIN q
          |  ORDER BY ${cosSql("centroid", "qv")} DESC, label ASC LIMIT $nprobe"""
         .stripMargin
-    val flat = graft.ops.VectorOps.oracleCentroidsPath.map { p =>
+    val flat = ArtifactStore.path("ivf_centroids", sf, "embeddings", "v2")
+    val p = trainedIvfPath(sf)
+    val b = trainedIvfPath(sf, VectorOps.batchNlist(s, sf))
+    Map(
       "q_ivf_topk" ->
         s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |c AS (SELECT label, centroid FROM read_parquet('$p/*.parquet')),
+           |c AS (SELECT label, centroid FROM read_parquet('$flat/*.parquet')),
            |probed AS (${probedSql(3)})
            |SELECT e.vec_id, e.label, ${e6(cosSql("embedding", "qv"))} AS score_e6
            |FROM embeddings e JOIN probed USING (label) CROSS JOIN q
-           |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
-    }
-    val trained = graft.ops.VectorOps.oracleTrainedDefaultPath.map { p =>
+           |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin,
       "q_ivf_trained_topk" ->
         s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
            |c AS (SELECT label, centroid FROM read_parquet('$p/centroids/*.parquet')),
@@ -2476,14 +2476,12 @@ object SparkEntry {
            |SELECT e.vec_id, a.label, ${e6(cosSql("embedding", "qv"))} AS score_e6
            |FROM ev e JOIN a USING (vec_id) JOIN probed USING (label)
            |CROSS JOIN q
-           |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
-    }
-    val batch = graft.ops.VectorOps.oracleBatchTrainedPath.map { p =>
+           |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin,
       "q_ivf_topk_batch" ->
         s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS qv
            |  FROM embeddings WHERE vec_id % 100 = 0),
-           |c AS (SELECT label, centroid FROM read_parquet('$p/centroids/*.parquet')),
-           |a AS (SELECT vec_id, label FROM read_parquet('$p/assign/*.parquet')),
+           |c AS (SELECT label, centroid FROM read_parquet('$b/centroids/*.parquet')),
+           |a AS (SELECT vec_id, label FROM read_parquet('$b/assign/*.parquet')),
            |ev AS (SELECT vec_id, embedding FROM embeddings),
            |probes AS (SELECT query_id, qv, label FROM qs CROSS JOIN c
            |  QUALIFY row_number() OVER (PARTITION BY query_id
@@ -2494,10 +2492,12 @@ object SparkEntry {
            |SELECT query_id, vec_id, score_e6 FROM cand
            |QUALIFY row_number() OVER (PARTITION BY query_id
            |  ORDER BY score_e6 DESC, vec_id ASC) <= 5
-           |ORDER BY query_id ASC, score_e6 DESC, vec_id ASC""".stripMargin
-    }
-    (flat.toSeq ++ trained.toSeq ++ batch.toSeq).toMap
+           |ORDER BY query_id ASC, score_e6 DESC, vec_id ASC""".stripMargin)
   }
+
+  /** `VectorOps.ensureTrainedIvf(s, sf, nlist)`'s directory. */
+  private def trainedIvfPath(sf: String, nlist: Int = 16): String =
+    ArtifactStore.path("ivf_trained", sf, "embeddings", s"$nlist:2:v3")
 
   /** PQ probe replays (since r12): ADC scores are order-free integer sums
     * of per-(subspace, code) micro-int partials, themselves pure functions
@@ -2507,7 +2507,7 @@ object SparkEntry {
     * the squared L2 between a codebook centroid and the query's 2-dim
     * subvector (list slice), micro-int-collapsed BEFORE the per-vector sum
     * exactly as `PqOps.adcTable` does. */
-  private def pqOracles: Map[String, String] = {
+  private def pqOracles(sf: String): Map[String, String] = {
     val dsub = graft.ops.PqOps.DSUB
     val m = graft.ops.PqOps.M
     val short = graft.ops.PqOps.SHORTLIST
@@ -2537,32 +2537,29 @@ object SparkEntry {
       s"""SELECT e.vec_id, ${e6(cosSql("embedding", "qv"))} AS score_e6
          |FROM embeddings e JOIN short USING (vec_id) CROSS JOIN q
          |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
-    val flat = graft.ops.PqOps.oraclePqPath.map { pq =>
+    val pq = ArtifactStore.path("pq", sf, "embeddings", s"pq:$m:${PqOps.KSUB}:2:v2")
+    val ivf = trainedIvfPath(sf)
+    Map(
       "q_pq_topk" ->
         s"""WITH ${adcCtes(pq)},
            |sc AS (SELECT vec_id, sum(pd_e6) AS adc
            |  FROM ex JOIN adc USING (sub, code) GROUP BY vec_id),
            |short AS (SELECT vec_id FROM sc
            |  ORDER BY adc ASC, vec_id ASC LIMIT $short)
-           |$rerank""".stripMargin
-    }
-    val ivfpq = for {
-      pq <- graft.ops.PqOps.oraclePqPath
-      ivf <- graft.ops.VectorOps.oracleTrainedDefaultPath
-    } yield "q_ivfpq_topk" ->
-      s"""WITH ${adcCtes(pq)},
-         |c AS (SELECT label, centroid AS lc
-         |  FROM read_parquet('$ivf/centroids/*.parquet')),
-         |asg AS (SELECT vec_id, label FROM read_parquet('$ivf/assign/*.parquet')),
-         |probed AS (SELECT label FROM c CROSS JOIN q
-         |  ORDER BY ${cosSql("lc", "qv")} DESC, label ASC LIMIT 3),
-         |sc AS (SELECT vec_id, sum(pd_e6) AS adc
-         |  FROM ex JOIN asg USING (vec_id) JOIN probed USING (label)
-         |  JOIN adc USING (sub, code) GROUP BY vec_id),
-         |short AS (SELECT vec_id FROM sc
-         |  ORDER BY adc ASC, vec_id ASC LIMIT $short)
-         |$rerank""".stripMargin
-    (flat.toSeq ++ ivfpq.toSeq).toMap
+           |$rerank""".stripMargin,
+      "q_ivfpq_topk" ->
+        s"""WITH ${adcCtes(pq)},
+           |c AS (SELECT label, centroid AS lc
+           |  FROM read_parquet('$ivf/centroids/*.parquet')),
+           |asg AS (SELECT vec_id, label FROM read_parquet('$ivf/assign/*.parquet')),
+           |probed AS (SELECT label FROM c CROSS JOIN q
+           |  ORDER BY ${cosSql("lc", "qv")} DESC, label ASC LIMIT 3),
+           |sc AS (SELECT vec_id, sum(pd_e6) AS adc
+           |  FROM ex JOIN asg USING (vec_id) JOIN probed USING (label)
+           |  JOIN adc USING (sub, code) GROUP BY vec_id),
+           |short AS (SELECT vec_id FROM sc
+           |  ORDER BY adc ASC, vec_id ASC LIMIT $short)
+           |$rerank""".stripMargin)
   }
 
   private def prunedScanSql: String =

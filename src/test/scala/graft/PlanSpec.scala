@@ -322,10 +322,11 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("contract consistency: every oracle key is a wired query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val oracle = SparkEntry.oracleSql(spark, sf)
+    val orphans = oracle.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
     assert(SparkEntry.queries.size >= 95)
-    assert(SparkEntry.oracleSql.size >= 85)
+    assert(oracle.size >= 85)
   }
 
   test("query functions never run jobs during construction") {

@@ -280,17 +280,17 @@ class ScaleOpsSpec extends SparkTestBase {
     // the source fingerprint is part of the directory name: regenerated
     // source data maps to a NEW write-once dir, never a mutation of this one
     assert(dir.getName.matches("sf.*_[0-9a-f]{8}"), dir.getName)
-    assert(new java.io.File(dir, "_SUCCESS").exists())
+    assert(graft.ops.ArtifactStore.isCommitted(dir))
     val other = new java.io.File(VectorOps.ensureCentroids(spark, "/root/testdata/sf0.001"))
     assert(other.getName != dir.getName,
       "different source data must key a different artifact dir")
 
     // simulate a killed writer: part files present but no commit marker —
     // a bare directory-existence check would read this as-is
-    new java.io.File(dir, "_SUCCESS").delete()
+    new java.io.File(dir, graft.ops.ArtifactStore.Marker).delete()
     val rebuilt = new java.io.File(VectorOps.ensureCentroids(spark, sfDir))
     assert(rebuilt.getName == dir.getName)
-    assert(new java.io.File(rebuilt, "_SUCCESS").exists(),
+    assert(graft.ops.ArtifactStore.isCommitted(rebuilt),
       "partial artifact was trusted instead of rebuilt")
     assert(VectorOps.qIvfTopk(spark, sfDir).count() == 10)
   }
@@ -413,7 +413,7 @@ class ScaleOpsSpec extends SparkTestBase {
               start.await()
               try {
                 val d = VectorOps.ensureCentroids(spark, sfDir)
-                assert(new java.io.File(d, "_SUCCESS").exists())
+                assert(graft.ops.ArtifactStore.isCommitted(new java.io.File(d)))
                 assert(spark.read.parquet(d).count() > 0)
               } catch { case t: Throwable => failures.add(t): Unit }
             }

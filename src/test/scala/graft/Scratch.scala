@@ -170,7 +170,7 @@ object Scratch {
         // generation off the materialized fo, (3) verify join
         import org.apache.spark.sql.functions._
         import graft.ops.DedupOps
-        val dir = args.lift(1).getOrElse("target/bench_scaled/sf0.1_x64")
+        val dir = args(1)
         val docs = graft.ops.Tables.t(spark, dir, "documents")
         (1 to 3).foreach { rd =>
           val t0 = System.nanoTime()
@@ -200,7 +200,7 @@ object Scratch {
         // sub-stage timing inside candidatePairs at a scaled dir
         import org.apache.spark.sql.functions._
         import graft.ops.DedupOps
-        val dir = args.lift(1).getOrElse("target/bench_scaled/sf0.1_x64")
+        val dir = args(1)
         val docs = graft.ops.Tables.t(spark, dir, "documents")
         val hashed = DedupOps.withShingles(docs, "source")
           .withColumn("sh", transform(col("sh"), x => xxhash64(x)))
@@ -233,7 +233,7 @@ object Scratch {
         // pre-groupBy pair-row count at a scaled dir
         import org.apache.spark.sql.functions._
         import graft.ops.DedupOps
-        val dir = args.lift(1).getOrElse("target/bench_scaled/sf0.1_x16")
+        val dir = args(1)
         val docs = graft.ops.Tables.t(spark, dir, "documents")
         val hashed = DedupOps.withShingles(docs, "source")
           .withColumn("sh", transform(col("sh"), x => xxhash64(x)))

@@ -89,6 +89,28 @@ class StatsOpsSpec extends SparkTestBase {
     }
   }
 
+  test("q_pruned_scan leaves the session's parquet timestamp type as it was") {
+    // a fresh sf dir keys a fresh staged layout, so the staging write runs
+    val fresh = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "stats_conf").toFile
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/lineitem.parquet"),
+      new java.io.File(fresh, "lineitem.parquet").toPath)
+    val staged = graft.ops.ArtifactStore.path(
+      "stats_scan", fresh.toString, "lineitem", "shipdate-v1")
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prior = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      StatsOps.qPrunedScan(spark, fresh.toString).collect()
+      assert(new java.io.File(staged).isDirectory, "layout was not staged")
+      assert(spark.conf.get(key) == "TIMESTAMP_MILLIS")
+    } finally {
+      spark.conf.set(key, prior)
+      Seq(staged, fresh.toString).foreach(d =>
+        graft.ops.VectorOps.deleteRecursively(new java.io.File(d)))
+    }
+  }
+
   test("unusable stats fail open: string column prunes nothing") {
     val stats = StatsOps.footerStats(spark, work, "l_returnflag")
     // binary stats are rejected (non-numeric), so min/max must be null...
