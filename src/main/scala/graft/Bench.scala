@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline queries over SPARK_GRAFT_SF_DIR and
@@ -130,7 +131,7 @@ object Bench {
     val warmSf = "/root/testdata/sf0.001"
     run.foreach { name =>
       try force(SparkEntry.queries(name)(spark, warmSf))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // median of N runs per query: a single run moved 41% between identical
@@ -152,7 +153,7 @@ object Bench {
         force(fns(name)(spark, sfDir))
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           None
       }
@@ -177,14 +178,14 @@ object Bench {
       "bigram_lm" -> (() => SearchOps.ensureBigramLm(spark, sfDir)))
     artifacts.foreach { case (kind, build) =>
       try build(): Unit
-      catch { case scala.util.control.NonFatal(e) =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] artifact $kind FAILED: ${e.getMessage}")
       }
     }
     // untimed warmup pass at the TARGET sf: first-touch page cache, JIT at
     // the real data shapes — doubles as the round-robin's pass 0
     run.foreach { name =>
-      try force(fns(name)(spark, sfDir)) catch { case _: Throwable => () }
+      try force(fns(name)(spark, sfDir)) catch { case NonFatal(_) => () }
     }
     val sentinel = new Sentinel(spark)
     val sentinelStart = sentinel.time()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.ops.Tables
 
 /** Ingestion-pipeline benchmark (r16 verdict task 3): push N×-replicated
   * CSV + xlsx inputs through the REAL `IngestionPipeline.run` (degrade +
@@ -46,7 +47,7 @@ object BenchIngest {
       val staged = new java.io.File(inputsDir, s"${table}_0.csv")
       if (!staged.exists()) {
         val tmp = new java.io.File(base, s"csv_tmp_$table")
-        spark.read.parquet(s"$sfDir/$table.parquet")
+        Tables.open(spark, s"$sfDir/$table.parquet")
           .coalesce(1)
           .write.mode("overwrite").option("header", "true").csv(tmp.toString)
         val part = tmp.listFiles().find(_.getName.endsWith(".csv"))

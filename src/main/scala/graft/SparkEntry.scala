@@ -264,7 +264,7 @@ object SparkEntry {
       s: SparkSession, sfDir: String): DataFrame = {
     val catalog = tables.map(CatalogOps.profileTable(s, sfDir, _))
     catalog.foreach(e =>
-      s.read.parquet(e.parquetPath).createOrReplaceTempView(e.logicalName))
+      Tables.open(s, e.parquetPath).createOrReplaceTempView(e.logicalName))
     val text = catalog.map(_.describe).mkString("\n")
     s.sql(graft.planner.TemplateSqlGenerator.generate(question, text)
       .getOrElse(sys.error(s"template generator returned no SQL for: $question")))

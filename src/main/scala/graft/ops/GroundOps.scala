@@ -42,7 +42,7 @@ object GroundOps {
     * bit-identical). */
   def ensureGroundCollection(s: SparkSession, sf: String): String =
     ArtifactStore.ensure("nl_ground", sf, "nation", s"nlground-v1:$question") { tmp =>
-      val df = s.read.parquet(s"$sf/nation.parquet")
+      val df = Tables.open(s, s"$sf/nation.parquet")
       val chunks = IngestionPipeline.chunkTable(df, df.columns.head, budget = 1000)
       chunks
         .withColumn("embedding", IngestionPipeline.stubEmbed(dim)(col("text")))
@@ -75,7 +75,7 @@ object GroundOps {
       case None =>
         // empty corpus (the empty-input contract): nothing retrieved →
         // nothing grounded → an empty frame in the face's exact shape
-        s.read.parquet(s"$sf/nation.parquet").limit(0)
+        Tables.open(s, s"$sf/nation.parquet").limit(0)
           .withColumn("chunk_id", lit(0L))
           .withColumn("score_e6", lit(0L))
           .withColumn("grounded_value", lit(""))

@@ -24,7 +24,7 @@ object IngestOps {
       else if (lower.endsWith(".json"))
         spark.read.option("multiLine", "true").json(path)
       else if (lower.endsWith(".parquet"))
-        spark.read.parquet(path)
+        Tables.open(spark, path)
       else if (lower.endsWith(".orc"))
         spark.read.orc(path)
       else if (lower.endsWith(".xlsx"))
@@ -70,7 +70,7 @@ object IngestOps {
       s.read.option("header", "true").option("inferSchema", "true")
         .csv(s"$work/orders_csv"))
     writeParquetZstd(csvBack, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    Tables.open(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -89,7 +89,7 @@ object IngestOps {
       s.read.option("header", "true").option("inferSchema", "true")
         .option("sep", "\t").csv(s"$work/orders_tsv"))
     writeParquetZstd(back, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    Tables.open(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -108,7 +108,7 @@ object IngestOps {
     // write; on non-empty data it matches what inference produces
     val back = CleanColumns(s.read.schema(out.schema).json(s"$work/orders_json"))
     writeParquetZstd(back, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    Tables.open(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -136,7 +136,7 @@ object IngestOps {
     // by OpsSpec's readAny dispatch test on real files)
     val back = CleanColumns(s.read.schema(src.schema).orc(s"$work/orders_orc"))
     writeParquetZstd(back, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    Tables.open(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -181,7 +181,7 @@ object IngestOps {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(srcDir)
+    Tables.open(spark, srcDir)
       .repartition(nFiles)
       .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dstDir)
     nFiles

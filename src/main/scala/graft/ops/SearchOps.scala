@@ -164,8 +164,8 @@ object SearchOps {
     * are RE-derived here from the merged postings_pos + merged stats,
     * never unioned from per-segment values. */
   private def derivePostingsTables(s: SparkSession, outDir: String): Unit = {
-    val backPos = s.read.parquet(s"$outDir/postings_pos")
-    val stats = s.read.parquet(s"$outDir/stats")
+    val backPos = Tables.open(s, s"$outDir/postings_pos")
+    val stats = Tables.open(s, s"$outDir/stats")
       .select(col("n_docs"), col("avgdl"))
     val tfRows = backPos
       .select(col("term"), col("doc_id"), col("dl"),
@@ -196,13 +196,13 @@ object SearchOps {
     * periodically (compaction discipline as in IngestOps.compact). */
   def mergeLexIndex(s: SparkSession, segDirs: Seq[String], outDir: String): Unit = {
     require(segDirs.nonEmpty, "mergeLexIndex: no segments")
-    val pos = segDirs.map(d => s.read.parquet(s"$d/postings_pos"))
+    val pos = segDirs.map(d => Tables.open(s, s"$d/postings_pos"))
       .reduce(_.unionByName(_))
     zstd(pos.repartitionByRange(col("term"))
       .sortWithinPartitions("term", "doc_id"), s"$outDir/postings_pos")
     // stats FIRST: derivePostingsTables denormalizes the merged
     // n_docs/avgdl into the postings rows, so it reads this table
-    val st = segDirs.map(d => s.read.parquet(s"$d/stats"))
+    val st = segDirs.map(d => Tables.open(s, s"$d/stats"))
       .reduce(_.unionByName(_))
     zstd(st.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
       .select(col("n_docs"),

@@ -98,8 +98,8 @@ object StatsOps {
       .select("file").collect().map(_.getString(0))
     val total = stats.count().toInt
     val df =
-      if (keep.isEmpty) spark.read.parquet(dir).limit(0)
-      else spark.read.parquet(keep: _*)
+      if (keep.isEmpty) Tables.open(spark, dir).limit(0)
+      else Tables.open(spark, keep: _*)
     (df, keep.length, total)
   }
 
@@ -161,6 +161,6 @@ object StatsOps {
   def qPrunedScanRule(s: SparkSession, sf: String): DataFrame = {
     val work = stagedShipdateLayout(s, sf)
     graft.plans.StatsPruneRule.registerIndex(s, work, "l_shipdate")
-    shipdateWindowAgg(s.read.parquet(work))
+    shipdateWindowAgg(Tables.open(s, work))
   }
 }

@@ -1,8 +1,14 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Table access + numeric-determinism helpers shared by every operator.
   *
@@ -18,26 +24,57 @@ object Tables {
     * [[graft.plans.StatsPruneRule.registerIndex]] — the optimizer rule
     * rewrites filtered scans to list only files whose min/max range can
     * match, fail-open, with no per-call opt-in here. */
-  /** Schema cache: parquet schema inference costs one footer-read JOB per
-    * `spark.read.parquet` call — a pure fixed tax on every query
-    * CONSTRUCTION (benched: ~0.03-0.2 s each). Testdata and artifact
-    * datasets are immutable within a JVM, so the first read's inferred
-    * schema is reused; the key carries the dataset's mtime so a rewritten
-    * path (fixture overwrite in tests) re-infers instead of serving a
-    * stale layout. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else {
-      val p = s"$sfDir/$name.parquet"
-      val key = s"$p:${new java.io.File(p).lastModified}"
-      val sch = schemaCache.computeIfAbsent(key,
-        _ => spark.read.parquet(p).schema)
-      spark.read.schema(sch).parquet(p)
+    else open(spark, s"$sfDir/$name.parquet")
+
+  /** Open parquet datasets with their schema read on the driver.
+    * `spark.read.parquet` infers the schema with a one-task Spark job that
+    * reads one footer — a fixed tax on every table a query binds. Here the
+    * same footer is read directly and handed over as the user schema.
+    * Without `mergeSchema`, Spark's inference reads exactly one footer,
+    * picked from the visible leaf files of every path in full-path order:
+    * `_common_metadata`, else `_metadata`, else the first data file.
+    * Visible means the name does not start with `_` (unless it holds a
+    * `=`) or `.`, and does not end in `._COPYING_`; names starting with
+    * `_common_metadata` or `_metadata` stay visible.
+    *
+    * Everything else takes plain `spark.read.parquet`, so its errors and
+    * partition discovery are Spark's own: a missing path, a path with glob
+    * characters, a directory with visible subdirectories, no data file,
+    * or a footer that does not read. */
+  def open(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
     }
+
+  private def visible(name: String): Boolean =
+    name.startsWith("_common_metadata") || name.startsWith("_metadata") ||
+      !((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  private val summaries = Seq("_common_metadata", "_metadata")
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    if (paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      // listStatus of a file is the file itself
+      val leaves = paths.flatMap { p =>
+        val path = new Path(p)
+        path.getFileSystem(conf).listStatus(path).toSeq
+      }.filter(s => visible(s.getPath.getName)).sortBy(_.getPath.toString)
+      if (leaves.exists(_.isDirectory)) None
+      else summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+        .orElse(leaves.find(s => !summaries.contains(s.getPath.getName)))
+        .map { st =>
+          val footer = ParquetFileReader.readFooter(conf, st,
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        }
+    } catch { case NonFatal(_) => None }
 
   /** Like [[t]], but with a KERNEL-PARALLELISM FLOOR for CPU-heavy per-row
     * work (shingling, tokenization, n-gram explodes): a small table is one
@@ -108,14 +145,7 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same footer-read-per-construction tax as t(); cache under the same
-    // (path, mtime) key (nanosAsLong is set before either branch, so the
-    // inferred schema is stable across calls)
-    val p = s"$sfDir/events.parquet"
-    val key = s"$p:${new java.io.File(p).lastModified}"
-    val sch = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(p).schema)
-    val raw = spark.read.schema(sch).parquet(p)
+    val raw = open(spark, s"$sfDir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
       case org.apache.spark.sql.types.TimestampNTZType => col("ts").cast("timestamp")

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.ops.{CatalogOps, CleanColumns, IngestOps, ProfileOps}
+import graft.ops.{CatalogOps, CleanColumns, IngestOps, ProfileOps, Tables}
 import graft.sources.ExcelSource
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -277,7 +277,7 @@ object IngestionPipeline {
       val done = timed("read_schema")(readTables(spark, local)).map { case (table, df) =>
         val pq = s"$outDir/parquet_files/$table.parquet"
         timed("read_clean_write")(IngestOps.writeParquetZstd(df, pq))
-        val persisted = spark.read.parquet(pq)
+        val persisted = Tables.open(spark, pq)
         val entry = timed("profile")(profileEntry(persisted, table, pq))
         val chunks = chunkTable(persisted, persisted.columns.head, chunkBudget,
           rowHint = Some(entry.rowCount))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.CatalogOps.TableEntry
@@ -43,7 +44,7 @@ object QueryPipeline {
     * attribution (`chroma_retrieval_util.py:307-459`). */
   def semanticSearch(spark: SparkSession, collectionPath: String,
       question: String, k: Int = 10): DataFrame = {
-    val coll = spark.read.parquet(collectionPath)
+    val coll = Tables.open(spark, collectionPath)
     val qv = spark.range(1).select(
       IngestionPipeline.stubEmbed(64)(lit(question)).as("qv"))
     coll.crossJoin(broadcast(qv))
@@ -61,7 +62,7 @@ object QueryPipeline {
     * tables on it; single table → plain load. */
   def loadContext(spark: SparkSession, entries: Seq[TableEntry],
       joinKey: Option[String]): DataFrame = {
-    val dfs = entries.map(e => (e.logicalName, spark.read.parquet(e.parquetPath)))
+    val dfs = entries.map(e => (e.logicalName, Tables.open(spark, e.parquetPath)))
     (dfs, joinKey) match {
       case (Seq((_, only)), _) => only
       case (many, None) =>
@@ -79,14 +80,14 @@ object QueryPipeline {
   def run(spark: SparkSession, question: String, catalog: Seq[TableEntry],
       hooks: Hooks = Hooks(), collectionPath: Option[String] = None): Answer = {
     catalog.foreach(e =>
-      spark.read.parquet(e.parquetPath).createOrReplaceTempView(e.logicalName))
+      Tables.open(spark, e.parquetPath).createOrReplaceTempView(e.logicalName))
     val catalogText = catalog.map(_.describe).mkString("\n")
 
     val subResults = hooks.decomposer.decompose(question).map { sub =>
       val (tables, _) = hooks.identifier.identify(sub, catalog)
       val intent =
         try hooks.router.route(sub)
-        catch { case _: Throwable => SqlQuery } // reference fallback :346-349
+        catch { case NonFatal(_) => SqlQuery } // reference fallback :346-349
       // Execution is FORCED inside this try: Spark analyzes lazily, so a
       // sub-query that passes analysis can still fail at runtime (ANSI
       // cast/overflow errors — Spark 4 default). The reference's degrade
@@ -140,7 +141,7 @@ object QueryPipeline {
         SubResult(sub, intentOut, tables, df, err,
           df.queryExecution.toRdd.count(), grounding)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           SubResult(sub, intent, tables,
             errorFrame(spark, e.getMessage), Some(e.getClass.getSimpleName), 1L)
       }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.Tables
 
 /** Structured-Streaming operators over the events stream. The reference has
   * no streaming (SURVEY §2e) — these are the Spark-native extensions that
@@ -96,7 +97,7 @@ object EventStream {
   def readEventsStream(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
+    val tsType = Tables.open(spark, dir).schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),

@@ -345,6 +345,39 @@ class QueryPipelineSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
   }
 
+  test("hook exceptions degrade; fatal JVM errors propagate out of run") {
+    object CountCustomers extends SqlGenerator {
+      def generate(q: String, c: String): Option[String] =
+        Some("SELECT count(*) AS n FROM customer")
+    }
+    class ThrowingRouter(e: => Throwable) extends PlannerHooks.IntentRouter {
+      def route(q: String): PlannerHooks.Intent = throw e
+    }
+    class ThrowingGen(e: => Throwable) extends SqlGenerator {
+      def generate(q: String, c: String): Option[String] = throw e
+    }
+    val catalog = Seq(CatalogOps.profileTable(spark, sf, "customer"))
+    def run(hooks: QueryPipeline.Hooks) =
+      QueryPipeline.run(spark, "how many customers", catalog, hooks)
+
+    val routed = run(QueryPipeline.Hooks(sqlGen = CountCustomers,
+      router = new ThrowingRouter(new RuntimeException("router down")))).subResults.head
+    assert(routed.intent == PlannerHooks.SqlQuery && routed.error.isEmpty)
+    assert(routed.result.columns.toSeq == Seq("n"))
+
+    val degraded = run(QueryPipeline.Hooks(
+      sqlGen = new ThrowingGen(new RuntimeException("sqlgen down")))).subResults.head
+    assert(degraded.error.contains("RuntimeException"))
+    assert(degraded.result.columns.toSeq == Seq("error"))
+
+    val oomRouter = intercept[OutOfMemoryError](run(QueryPipeline.Hooks(
+      sqlGen = CountCustomers, router = new ThrowingRouter(new OutOfMemoryError("test")))))
+    assert(oomRouter.getMessage == "test")
+    val oomGen = intercept[OutOfMemoryError](run(QueryPipeline.Hooks(
+      sqlGen = new ThrowingGen(new OutOfMemoryError("test")))))
+    assert(oomGen.getMessage == "test")
+  }
+
   test("grounding: edit distance counts adjacent transposition as one edit") {
     import graft.planner.Grounding
     assert(Grounding.editDistance("jhon", "john") == 1)
